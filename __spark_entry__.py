@@ -1420,8 +1420,8 @@ def _q_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k=2 core of the entity co-occurrence graph (iterative peel, one
-    degree groupBy + two semi-joins per round, CC-style lineage cuts +
-    convergence checksum; max_iter guard raises rather than overstating
+    pair of degree windows per round, kg.fixpoint lineage cuts + exact
+    certificate; max_iter guard raises rather than overstating
     the core). Oracle: the same peel in pure Python over the
     materialized triples table."""
     from ner_backend_spark.spark.graph import kcore
@@ -1495,8 +1495,8 @@ def _q_kg_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes >= 1 triangle within the truss) with per-edge in-truss
     support — the edge-cohesion complement of q_kg_kcore (degree can be
     inflated by a star; triangle support cannot). Iterative peel, one
-    degree-oriented wedge support count per round, CC-style lineage
-    cuts + convergence checksum; max_iter raises rather than overstating
+    degree-oriented wedge support count per round, kg.fixpoint lineage
+    cuts + exact certificate; max_iter raises rather than overstating
     the truss. Oracle: the same peel in pure Python over the
     materialized triples table."""
     from ner_backend_spark.spark.graph import truss

@@ -31,7 +31,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .kg import _materialize
+from .kg import _materialize, fixpoint
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """(a, b) with a < b: the distinct undirected edges of a (src, dst) set,
+    self-loops dropped — the und convention every operator here shares."""
+    return (
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+        )
+        .distinct()
+    )
 
 
 def degrees(triples: DataFrame) -> DataFrame:
@@ -73,7 +87,7 @@ def pagerank(
 
     Fixed iteration count (not convergence detection) keeps the result a
     pure function of the input — the property the DuckDB oracle needs —
-    and avoids the driver-blocking convergence checksums that cap the CC
+    and avoids the driver-blocking convergence tests that cap the CC
     fixpoint's scaling (kg.connected_components discussion).
 
     Plan shape per iteration: one co-partitioned join (edge⋈rank, both
@@ -178,15 +192,7 @@ def _oriented_edges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     (an RDD cut here degraded the downstream joins to sort-merge —
     measured 20.6 s vs 6.4 s warm on the sf0.01 co-occurrence graph).
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = _materialize(_undirected(edges))
     sym = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).select(
         F.col("a").alias("node"), "deg"
@@ -413,15 +419,7 @@ def neighbor_jaccard(
     by many centers (a large profile — just a count), but never explodes
     a join. No adjacency list is ever collected.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
+    und = _materialize(_undirected(edges))
     sym = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")).union(
         und.select(F.col("b").alias("node"), F.col("a").alias("nbr"))
     )
@@ -465,73 +463,66 @@ def neighbor_jaccard(
     )
 
 
+def _kcore_keep(k: int):
+    return (F.col("deg_a") >= k) & (F.col("deg_b") >= k)
+
+
+def _kcore_round(state: DataFrame, k: int) -> DataFrame:
+    """One peel round over (a, b, deg_a, deg_b): drop the edges the last
+    round's degrees failed, then attach each endpoint's degree among the
+    survivors. The output keeps every survivor, so the certificate can
+    check it."""
+    cur = state.filter(_kcore_keep(k)).select("a", "b")
+    # two-window peel round (round 8): symmetrize, attach each
+    # endpoint's degree via a window count (every edge appears in
+    # both directions, so partitionBy(a) counts deg(a) and
+    # partitionBy(b) counts deg(b)), keep the a<b direction —
+    # identical to the old degree-groupBy + two semi-joins, minus one
+    # exchange and the node-sized join sides.
+    sym = cur.union(cur.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    d = sym.withColumn(
+        "deg_a", F.count(F.lit(1)).over(Window.partitionBy("a"))
+    ).withColumn("deg_b", F.count(F.lit(1)).over(Window.partitionBy("b")))
+    return d.filter(F.col("a") < F.col("b")).select("a", "b", "deg_a", "deg_b")
+
+
+def _kcore_done(state: DataFrame, k: int) -> DataFrame:
+    """Exact k-core certificate: every edge passes the keep filter, so every
+    node has degree >= k within the edge set (and the peel, which only ever
+    removes, cannot remove anything more)."""
+    return state.agg(F.bool_and(_kcore_keep(k)))
+
+
 def kcore(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """(node, deg): the k-core of an undirected (src, dst) edge set —
     the maximal subgraph where every node keeps degree >= k — with each
     surviving node's in-core degree. The standard distributed peel:
     drop all nodes under degree k, re-count, repeat to fixpoint.
 
-    Each round is ONE degree groupBy + two semi-joins on node keys (no
-    adjacency collection anywhere); the per-round lineage cut /
-    convergence checksum follows the connected_components protocol.
+    Each round is two window counts on node keys (no adjacency
+    collection anywhere), run by :func:`kg.fixpoint`.
     Round count is bounded by the peel depth: dozens on real web/KG
     graphs (degeneracy ordering collapses fast), but THETA(n/2) on the
     adversarial path graph at k=2 — the max_iter guard raises rather
     than silently returning a non-core, since a partial peel OVERSTATES
     the core.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
+    und = _materialize(_undirected(edges))
+    # the state CARRIES the endpoint degrees: at the certificate they are
+    # the degrees of the final core, so the answer reads straight off the
+    # last cut round with no re-count (round 8). Seeded with degree k, so
+    # the first round keeps every edge.
+    core, _ = fixpoint(
+        und.select("a", "b", F.lit(k).alias("deg_a"), F.lit(k).alias("deg_b")),
+        lambda s: _kcore_round(s, k),
+        lambda s: _kcore_done(s, k),
+        max_iter,
+        "k-core peel",
     )
-    cur = und
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
-        # two-window peel round (round 8): symmetrize, attach each
-        # endpoint's degree via a window count (every edge appears in
-        # both directions, so partitionBy(a) counts deg(a) and
-        # partitionBy(b) counts deg(b)), keep the a<b direction of the
-        # edges whose BOTH endpoints survive — identical to the old
-        # degree-groupBy + two semi-joins, minus one exchange and the
-        # node-sized join sides.
-        sym = cur.union(
-            cur.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        )
-        d = sym.withColumn(
-            "deg_a", F.count(F.lit(1)).over(Window.partitionBy("a"))
-        ).withColumn("deg_b", F.count(F.lit(1)).over(Window.partitionBy("b")))
-        # the round state CARRIES the endpoint degrees: at the fixpoint
-        # (no edge dropped) they are by definition the degrees of the
-        # final core, so the old post-loop re-count (symmetrize +
-        # groupBy over the converged edges) is redundant — the answer
-        # reads straight off the last checkpointed round (round 8)
-        nxt = d.filter(
-            (F.col("deg_a") >= k)
-            & (F.col("deg_b") >= k)
-            & (F.col("a") < F.col("b"))
-        ).select("a", "b", "deg_a", "deg_b")
-        nxt = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum_ab(nxt)
-        if checksum == prev_sum:
-            converged = True
-            cur = nxt
-            break
-        prev_sum = checksum
-        cur = nxt.select("a", "b")
-    if not converged:
-        raise ValueError(
-            f"k-core peel did not converge in {max_iter} rounds"
-        )
     return (
-        cur.select(F.col("a").alias("node"), F.col("deg_a").alias("deg"))
+        core.select(F.col("a").alias("node"), F.col("deg_a").alias("deg"))
         .union(
-            cur.select(F.col("b").alias("node"), F.col("deg_b").alias("deg"))
+            core.select(F.col("b").alias("node"), F.col("deg_b").alias("deg"))
         )
         .distinct()
     )
@@ -596,6 +587,22 @@ def _edge_support(cur: DataFrame) -> DataFrame:
     return edges3.groupBy("ea", "eb").agg(F.count(F.lit(1)).alias("support"))
 
 
+def _truss_round(state: DataFrame, k: int) -> DataFrame:
+    """One peel round over (a, b, support): drop the edges the last round's
+    support failed, then attach each survivor's support among the
+    survivors (0 when it closes no triangle)."""
+    cur = state.filter(F.col("support") >= k - 2).select("a", "b")
+    sup = _edge_support(cur)
+    return cur.join(
+        sup, on=[F.col("a") == F.col("ea"), F.col("b") == F.col("eb")], how="left"
+    ).select("a", "b", F.coalesce(F.col("support"), F.lit(0)).alias("support"))
+
+
+def _truss_done(state: DataFrame, k: int) -> DataFrame:
+    """Exact k-truss certificate: every edge's support is >= k - 2."""
+    return state.agg(F.bool_and(F.col("support") >= k - 2))
+
+
 def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     """(node_a, node_b, support): the k-truss of an undirected (src, dst)
     edge set — the maximal subgraph in which every EDGE closes at least
@@ -611,56 +618,24 @@ def truss(edges: DataFrame, k: int, max_iter: int = 50) -> DataFrame:
     with the degree-oriented wedge machinery (:func:`_edge_support` —
     O(m^1.5) wedge rows regardless of hubs, one explode credits each
     triangle to its three edges), drop edges under k−2, repeat to
-    fixpoint. Per-round lineage cut + convergence checksum follow the
-    connected_components protocol; like the kcore guard, ``max_iter``
-    exhaustion raises rather than overstating the truss (a partial peel
-    keeps edges whose support has not yet drained). Support state is
-    edge-sized; no adjacency list is ever collected.
+    fixpoint, run by :func:`kg.fixpoint`; like the kcore guard,
+    ``max_iter`` exhaustion raises rather than overstating the truss (a
+    partial peel keeps edges whose support has not yet drained). Support
+    state is edge-sized; no adjacency list is ever collected.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
+    und = _materialize(_undirected(edges))
+    # the state CARRIES each edge's support: at the certificate it IS the
+    # support in the final truss, so no post-loop _edge_support pass — a
+    # full extra wedge enumeration over the converged graph (round 8).
+    # Seeded with support k - 2, so the first round keeps every edge.
+    kept, _ = fixpoint(
+        und.select("a", "b", F.lit(k - 2).alias("support")),
+        lambda s: _truss_round(s, k),
+        lambda s: _truss_done(s, k),
+        max_iter,
+        "k-truss peel",
     )
-    cur = und
-    prev_sum = None
-    converged = False
-    for _ in range(max_iter):
-        sup = _edge_support(cur.select("a", "b"))
-        # the round state CARRIES each surviving edge's support: at the
-        # fixpoint (no edge dropped) the support computed this round IS
-        # the support in the final truss, so the old post-loop
-        # _edge_support(cur) — a full extra wedge-enumeration pass over
-        # the converged graph — is redundant (round 8)
-        nxt = (
-            cur.select("a", "b")
-            .join(
-                sup,
-                on=[F.col("a") == F.col("ea"), F.col("b") == F.col("eb")],
-                how="left",
-            )
-            .select(
-                "a",
-                "b",
-                F.coalesce(F.col("support"), F.lit(0)).alias("support"),
-            )
-            .filter(F.col("support") >= k - 2)
-        )
-        nxt = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum_ab(nxt)
-        if checksum == prev_sum:
-            converged = True
-            cur = nxt
-            break
-        prev_sum = checksum
-        cur = nxt
-    if not converged:
-        raise ValueError(f"k-truss peel did not converge in {max_iter} rounds")
-    return cur.select(
+    return kept.select(
         F.col("a").alias("node_a"),
         F.col("b").alias("node_b"),
         "support",
@@ -748,16 +723,7 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     cut per round (lazy localCheckpoint) so the plan stays O(1) deep.
     The edge table is hash-partitioned once and reused every round.
     """
-    sym = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct(),
-        eager=False,
-    )
+    sym = _materialize(_undirected(edges), eager=False)
     adj = _materialize(
         sym.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
         .union(sym.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
@@ -786,21 +752,6 @@ def label_propagation(edges: DataFrame, iters: int = 3) -> DataFrame:
     return labels.select(F.col("id").alias("node"), "label")
 
 
-def _edge_checksum_ab(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(
-                F.pmod(F.xxhash64("a", "b"), F.lit(1_000_000_007)).cast(
-                    "decimal(38,0)"
-                )
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
-
-
 def graph_summary(edges: DataFrame, round_digits: int = 6) -> DataFrame:
     """One row (n_nodes, n_edges, max_deg, avg_deg, density): the graph
     census a KG build emits as run telemetry (the number a curator reads
@@ -815,16 +766,7 @@ def graph_summary(edges: DataFrame, round_digits: int = 6) -> DataFrame:
     2m/n and density = 2m/(n*(n-1)) are emitted rounded; fixed operand
     order mirrors the DuckDB oracle.
     """
-    und = _materialize(
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct(),
-        eager=False,
-    )
+    und = _materialize(_undirected(edges), eager=False)
     sym = und.select(F.col("a").alias("node")).union(
         und.select(F.col("b").alias("node"))
     )

@@ -11,31 +11,43 @@ schema.go:129-144 — this layer canonicalizes and materializes triples):
                            JVM-side; band-bucket self-join proposes pairs
                            (never all-pairs)
     -> link scoring        exact trigram Jaccard on proposed pairs
-    -> connected components alternating large-star / small-star (aggregate
-                           form: groupBy-min + join, no collect_list, so no
-                           high-degree-node blowup; O(log n) rounds)
+    -> connected components alternating large-star / small-star (window-min
+                           form, no collect_list, so no high-degree-node
+                           blowup; O(log n) rounds), stopped by an exact
+                           star-forest certificate
     -> canonicalization    per component: alias canonical id if any member
                            hit the dictionary, else the lexicographically
                            smallest surface
     -> triples             (subj=url, pred=HAS_<LABEL>, obj=canonical) +
                            (subj=url, pred=IN_GROUP, obj=group_name)
+
+Converging loops (connected components here, ``graph.kcore`` and
+``graph.truss``) all run through :func:`fixpoint`, which owns the one cut
+rule: each round's output is cut by the reliable eager checkpoint when a
+checkpoint dir is set, else by a lazy ``localCheckpoint`` whose first action
+is the round's convergence test. Each test is an exact certificate, one
+boolean aggregate over the cut round, never a hash of two rounds:
+
+  CC     the small-star output is a star forest: no node is both a src and
+         a dst, and no src has two dsts (Kiveris et al., SoCC 2014: a star
+         forest is the fixpoint of the large-star/small-star rounds)
+  kcore  every edge's endpoints, re-counted this round, have degree >= k
+  truss  every edge's support, re-counted this round, is >= k - 2
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-
-# diagnostic: star rounds executed by the last connected_components call
-# (read by tools/kg_tail_probe.py; never consulted by the operators)
-LAST_CC_ROUNDS: int | None = None
 
 
 def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     """Materialize a shared subplan in a deployment-appropriate way.
 
-    ``eager=True`` (the CC fixpoint rounds, where LINEAGE CUTS are the
-    point — unbounded iteration lineage otherwise): with a reliable
+    ``eager=True`` (the :func:`fixpoint` rounds, where LINEAGE CUTS are
+    the point — unbounded iteration lineage otherwise): with a reliable
     checkpoint dir configured (sc.setCheckpointDir — see session.get_spark's
     SPARK_CHECKPOINT_DIR), use ``.checkpoint()`` so an executor loss mid-CC
     recomputes from fault-tolerant storage (VERDICT r1 "What's wrong" #4);
@@ -53,9 +65,9 @@ def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
     RDD-level: no CacheManager entry, no plan substitution, blocks
     reclaimed when the RDD reference drops. The trade: lineage truncation,
     so an executor loss during the single consuming query fails that query
-    (re-run; the checkpoint/resume layer makes re-runs cheap) — the CC
-    fixpoint, where lineage cuts must survive executor loss, stays on the
-    reliable eager path below.
+    (re-run; the checkpoint/resume layer makes re-runs cheap) — the
+    fixpoint rounds, where lineage cuts must survive executor loss, stay on
+    the reliable eager path below whenever a checkpoint dir is set.
     """
     sc = df.sparkSession.sparkContext
     if not eager:
@@ -68,6 +80,38 @@ def _materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         df.unpersist()
         return out
     return df.localCheckpoint(eager=True)
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    done: Callable[[DataFrame], DataFrame],
+    max_iter: int,
+    what: str,
+) -> tuple[DataFrame, int]:
+    """Iterate ``state = step(state)`` until ``done(state)`` certifies it.
+
+    Returns ``(state, rounds)``. Every round's output is cut: with a
+    reliable checkpoint dir (real deployments), by the eager fault-tolerant
+    :func:`_materialize`, so an executor loss mid-fixpoint recomputes from
+    storage, and the certificate is a second job; without one (local
+    benches), by a lazy ``localCheckpoint`` whose materializing action IS
+    the certificate, so a round costs one job — per-round job count is the
+    KG tail's latency budget (VERDICT r3 "Next round" #7). ``done`` maps the cut output to a one-row frame
+    holding one boolean aggregate; it must be exact (true only at the
+    answer), which is what lets the loop stop on the round that reaches the
+    answer instead of spending a round confirming it. A null certificate
+    (the aggregate over an empty state) counts as true. Raises
+    ``ValueError`` when ``max_iter`` rounds pass without a certificate: a
+    partial iteration is a wrong answer, never a result.
+    """
+    reliable = state.sparkSession.sparkContext.getCheckpointDir() is not None
+    for rounds in range(1, max_iter + 1):
+        nxt = step(state)
+        state = _materialize(nxt) if reliable else nxt.localCheckpoint(eager=False)
+        if done(state).first()[0] is not False:
+            return state, rounds
+    raise ValueError(f"{what} did not converge in {max_iter} rounds")
 
 
 def normalize_surface(col):
@@ -409,288 +453,58 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return both.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _edge_checksum(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.sum(
-                F.pmod(F.xxhash64("src", "dst"), F.lit(1_000_000_007)).cast(
-                    "decimal(38,0)"
-                )
-            ),
-            F.lit(0),
-        ).alias("h"),
-    ).collect()[0]
-    return row["n"], row["h"]
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One CC round: a large-star then a small-star step."""
+    return _small_star(_large_star(edges))
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, steps_per_round: int = 1
-) -> DataFrame:
+def _is_star_forest(edges: DataFrame) -> DataFrame:
+    """CC certificate over a small-star output (oriented src > dst, distinct):
+    no node is both a src and a dst, and no src has two dsts. A star forest
+    is a fixpoint of :func:`_star_round`, and each star is one component
+    rooted at its min id, so the labelling is final — no confirm round."""
+    ends = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("node"), F.lit(1).alias("is_src")),
+                F.struct(F.col("dst").alias("node"), F.lit(0).alias("is_src")),
+            )
+        ).alias("e")
+    ).select("e.*")
+    # a node that is ever a src must occur exactly once (its one out-edge)
+    ok = (F.sum("is_src") == 0) | (F.count(F.lit(1)) == 1)
+    return ends.groupBy("node").agg(ok.alias("ok")).agg(F.bool_and("ok"))
+
+
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """(id, component): component = min node id in the component.
 
     Input edges: (src, dst). Isolated nodes don't appear; callers union
-    them back with component = own id.
+    them back with component = own id. Raises ``ValueError`` when the star
+    rounds do not reach a star forest within ``max_iter`` rounds.
     """
     # Materialize the input once: the edge lineage is typically expensive
     # (an LSH self-join), and it is consumed by the iteration seed AND the
     # node-set below — without this it would be recomputed per consumer.
     base = _materialize(edges.select("src", "dst"))
-    cur = base.filter(F.col("src") != F.col("dst")).distinct()
-    # Per-round job count is the KG tail's latency budget (VERDICT r3 "Next
-    # round" #7: ~40 short stages of fixed latency dominate the m10 e2e
-    # efficiency). With a reliable checkpoint dir (real deployments) each
-    # round stays 2 jobs: an eager fault-tolerant checkpoint, then the
-    # convergence checksum — an executor loss mid-fixpoint recomputes from
-    # storage. Without one (local benches), the round is ONE job: a lazy
-    # localCheckpoint whose materializing action IS the checksum aggregate,
-    # halving per-round job latency with identical results.
-    reliable = (
-        edges.sparkSession.sparkContext.getCheckpointDir() is not None
+    # one star alternation per cut: two per cut lost at m10 in the round-5
+    # A/B (BASELINE.md, "CC round-count A/B")
+    cur, _ = fixpoint(
+        base.filter(F.col("src") != F.col("dst")).distinct(),
+        _star_round,
+        _is_star_forest,
+        max_iter,
+        "connected components",
     )
-    # steps_per_round: star alternations per materialize+checksum. The
-    # round-4 hypothesis was that 2 steps/round would halve the driver-
-    # blocking fixed cost per round; the round-5 A/B on the m10 8.65M-edge
-    # graph (tools/cc_ab_m10.py, warm runs) REFUTED it: steps=1 beats
-    # steps=2 at both 4 cores (18.5 s vs 22.4 s) and 16 cores (14.5 s vs
-    # 16.2 s) — the checksum job is cheap next to the extra scheduling of
-    # the longer fused plan, and convergence at rounds=4 means steps=2
-    # wastes half an alternation's shuffles in the final confirm round
-    # (6 rounds executed vs 4). Default is therefore 1; the alternating
-    # algorithm is idempotent at the fixpoint, so any steps_per_round
-    # still detects convergence exactly.
-    global LAST_CC_ROUNDS
-    prev_sum = None
-    rounds = 0
-    for _ in range((max_iter + steps_per_round - 1) // steps_per_round):
-        nxt = cur
-        for _s in range(steps_per_round):
-            nxt = _small_star(_large_star(nxt))
-            # leaf-ify BETWEEN the chained alternations (lazy — no job of
-            # its own; the round's checksum job computes and caches it).
-            # Without this cut the second alternation's plan embeds the
-            # first's subplan at every self-reference (_small_star reads
-            # its input 3x, _large_star 2x) and the round re-executes
-            # those shuffles instead of reusing them — measured 2.4x KG
-            # wall blowup at m10 (282 s vs 116 s @4 cores) when the
-            # double-step first shipped without the cut. In reliable-
-            # checkpoint deployments the cut narrows fault tolerance for
-            # the intra-round window only: an executor loss mid-round
-            # fails that job and the stage-checkpoint layer re-runs from
-            # the last durable round — the round boundary itself stays on
-            # the reliable eager path below.
-            if _s < steps_per_round - 1:
-                nxt = nxt.localCheckpoint(eager=False)
-        rounds += steps_per_round
-        if reliable:
-            cur = _materialize(nxt)
-        else:
-            cur = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum(cur)
-        if checksum == prev_sum:
-            break
-        prev_sum = checksum
-    LAST_CC_ROUNDS = rounds
 
-    # final edges are (node -> root) stars; roots map to themselves; nodes
-    # come from the unfiltered base so self-loop-only nodes keep their id
+    # final edges are (node -> root) stars with one root per node, so they
+    # ARE the labelling; roots map to themselves; nodes come from the
+    # unfiltered base so self-loop-only nodes keep their id
     nodes = base.select(F.col("src").alias("id")).union(
         base.select(F.col("dst").alias("id"))
     ).distinct()
-    parent = cur.groupBy("src").agg(F.min("dst").alias("component"))
-    return nodes.join(
-        parent, nodes.id == parent.src, "left"
-    ).select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-
-
-def connected_components_hashmin(
-    edges: DataFrame, max_iter: int = 25
-) -> DataFrame:
-    """(id, component) via hash-to-min — the VERDICT-r5 A/B candidate.
-
-    Hash-to-min (Rastogi et al. 2013, "Finding Connected Components in
-    Map-Reduce in Logarithmic Rounds"): every node keeps a known-cluster
-    set C(v) (seeded with N(v) ∪ {v}); per round each v sends
-    min C(v) to every member of C(v) and sends C(v) to min C(v). The
-    fixpoint is C(min)=component, C(v)={min} elsewhere; it arrives in
-    O(log d) rounds — typically FEWER, FATTER rounds than the alternating
-    large-star/small-star in :func:`connected_components`.
-
-    Relational form (same discipline as the star variant — groupBy-min +
-    join, no collect_list): the state is an edge set (src, dst) meaning
-    "dst ∈ C(src)", each round is one groupBy + one join + one distinct,
-    and the per-round lineage cut / convergence checksum protocol is
-    identical to connected_components (lazy localCheckpoint whose
-    materializing action is the checksum aggregate on local runs, eager
-    reliable checkpoint when a checkpoint dir is configured).
-
-    SCALE HAZARD (why this is NOT the default): at the fixpoint the min
-    node of each component holds the ENTIRE component in its cluster set,
-    so the send-C(v)-to-min step hashes O(|component|) rows to ONE key —
-    a structural hot key for giant components, exactly the blowup the
-    alternating-star form avoids (its per-node state never exceeds the
-    node's degree). Use only where the component-size distribution is
-    known-bounded; the A/B harness is tools/cc_ab_hashmin.py.
-    """
-    base = _materialize(edges.select("src", "dst"))
-    sym = _symmetrize(base.filter(F.col("src") != F.col("dst"))).distinct()
-    nodes = base.select(F.col("src").alias("id")).union(
-        base.select(F.col("dst").alias("id"))
-    ).distinct()
-    # seed: C(v) = N(v) ∪ {v}
-    cur = sym.union(
-        nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
-    )
-    reliable = (
-        edges.sparkSession.sparkContext.getCheckpointDir() is not None
-    )
-    global LAST_CC_ROUNDS
-    prev_sum = None
-    rounds = 0
-    for _ in range(max_iter):
-        mins = cur.groupBy("src").agg(F.min("dst").alias("m"))
-        joined = cur.join(mins, "src")
-        # min C(v) -> every u ∈ C(v);  C(v) -> min C(v)
-        nxt = (
-            joined.select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-            .union(
-                joined.select(F.col("m").alias("src"), F.col("dst").alias("dst"))
-            )
-            .distinct()
-        )
-        rounds += 1
-        if reliable:
-            cur = _materialize(nxt)
-        else:
-            cur = nxt.localCheckpoint(eager=False)
-        checksum = _edge_checksum(cur)
-        if checksum == prev_sum:
-            break
-        prev_sum = checksum
-    LAST_CC_ROUNDS = rounds
-
-    parent = cur.groupBy("src").agg(F.min("dst").alias("component"))
-    return nodes.join(
-        parent, nodes.id == parent.src, "left"
-    ).select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
-    )
-
-
-def connected_components_peel1(
-    edges: DataFrame, max_iter: int = 25
-) -> DataFrame:
-    """(id, component) with a one-round degree-1 pre-peel — the
-    VERDICT-r6 #5 A/B candidate.
-
-    Rationale: on mention graphs most nodes are leaves (the round-6
-    stage audit: CC round 1 carries 8.65M → 89k edges at m10), and a
-    degree-1 node can never change any other node's component label —
-    so peel them relationally BEFORE the star fixpoint, run the
-    standard alternating CC on the (much smaller) 2-core-ish remainder,
-    then re-attach:
-
-    - pendant edge (leaf—anchor): leaf inherits the anchor's label
-      (anchor's own id when the anchor lost all its core edges — a star
-      hub);
-    - leaf—leaf edge: an isolated 2-node component, label min(a, b);
-    - a final member-min relabel restores the exact "component = min
-      node id" contract (the peel may remove the true min — e.g. a
-      leaf with the smallest id in its component), two node-sized
-      shuffles.
-
-    Every step is a semi/anti join or groupBy on node keys — no
-    adjacency collection. The A/B harness is tools/cc_ab_peel.py; like
-    connected_components_hashmin this stays in-tree either way so the
-    measurement is reproducible.
-
-    A/B RESULT (round 7, CC_PEEL_AB.json): REFUTED on the m10 8.65M-edge
-    mention graph at 16 cores — peel1 31.98 s vs baseline 18.36 s
-    (0.57x), assignments identical. The peel's own cost (degree groupBy
-    over the full edge set + four semi/anti joins + the member-min
-    relabel's two shuffles) exceeds the star round it displaces: the
-    alternating-star first round already collapses 8.65M → 89k edges in
-    ONE groupBy+join pass, so there is no fat to cut. The default stays
-    connected_components.
-    """
-    base = _materialize(edges.select("src", "dst"))
-    und = _materialize(
-        base.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-    )
-    sym = und.select(F.col("a").alias("node")).union(
-        und.select(F.col("b").alias("node"))
-    )
-    leaves = _materialize(
-        sym.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") == 1)
-        .select("node"),
-        eager=False,
-    )
-    la = leaves.withColumnRenamed("node", "a")
-    lb = leaves.withColumnRenamed("node", "b")
-    core = und.join(la, "a", "left_anti").join(lb, "b", "left_anti")
-    pend_a = (
-        und.join(la, "a", "left_semi")
-        .join(lb, "b", "left_anti")
-        .select(F.col("a").alias("leaf"), F.col("b").alias("anchor"))
-    )
-    pend_b = (
-        und.join(la, "a", "left_anti")
-        .join(lb, "b", "left_semi")
-        .select(F.col("b").alias("leaf"), F.col("a").alias("anchor"))
-    )
-    pairs = und.join(la, "a", "left_semi").join(lb, "b", "left_semi")
-
-    comp_core = _materialize(
-        connected_components(
-            core.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-            max_iter=max_iter,
-        ),
-        eager=False,
-    )
-    pend = pend_a.union(pend_b)
-    pend_lab = pend.join(
-        comp_core, pend.anchor == comp_core.id, "left"
-    ).select(
-        F.col("leaf").alias("id"),
-        F.coalesce("component", F.col("anchor")).alias("component"),
-    )
-    pair_lab = pairs.select(
-        F.col("a").alias("id"), F.col("a").alias("component")
-    ).union(
-        pairs.select(F.col("b").alias("id"), F.col("a").alias("component"))
-    )
-    # anchors that lost ALL their edges to the peel (star hubs) are in
-    # no core component — they must still appear as members of their own
-    # label or the member-min relabel below would relabel their leaves
-    # without them
-    iso_anchors = (
-        pend.select(F.col("anchor").alias("id"))
-        .distinct()
-        .join(comp_core, "id", "left_anti")
-        .select("id", F.col("id").alias("component"))
-    )
-    assigned = comp_core.union(pend_lab).union(pair_lab).union(iso_anchors)
-    # member-min relabel: the peel may have removed the component's true
-    # min node, and the contract (and every downstream canonicalizer)
-    # needs component = min member id exactly
-    roots = assigned.groupBy("component").agg(F.min("id").alias("root"))
-    relabeled = assigned.join(roots, "component").select(
-        "id", F.col("root").alias("component")
-    )
-    nodes = base.select(F.col("src").alias("id")).union(
-        base.select(F.col("dst").alias("id"))
-    ).distinct()
-    return nodes.join(relabeled, "id", "left").select(
-        "id", F.coalesce("component", F.col("id")).alias("component")
+    return nodes.join(cur, nodes.id == cur.src, "left").select(
+        "id", F.coalesce("dst", F.col("id")).alias("component")
     )
 
 

@@ -365,6 +365,30 @@ def test_kcore_empty_result(spark):
     assert kcore(path, k=2).count() == 0
 
 
+def test_peel_certificates_are_exact(spark):
+    # a graph that is already the answer certifies on the first round's
+    # output; a pendant path needs one round per peeled layer plus the
+    # round that certifies
+    from ner_backend_spark.spark import graph
+    from ner_backend_spark.spark.kg import fixpoint
+
+    def rounds(edges, k, step, done, seed):
+        df = spark.createDataFrame(edges, "a long, b long").withColumns(seed)
+        return fixpoint(
+            df, lambda s: step(s, k), lambda s: done(s, k), 50, "peel"
+        )[1]
+
+    deg2 = {"deg_a": F.lit(2), "deg_b": F.lit(2)}
+    ring = [(0, 1), (1, 2), (2, 3), (0, 3), (0, 2)]  # 2-core as it stands
+    assert rounds(ring, 2, graph._kcore_round, graph._kcore_done, deg2) == 1
+    tail = ring + [(3, 4), (4, 5)]  # peels (4, 5), then (3, 4)
+    assert rounds(tail, 2, graph._kcore_round, graph._kcore_done, deg2) == 3
+
+    k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]  # a 4-truss
+    sup2 = {"support": F.lit(2)}
+    assert rounds(k4, 4, graph._truss_round, graph._truss_done, sup2) == 1
+
+
 def test_neighbor_jaccard_hand_graph(spark):
     # triangle 1-2-3 plus pendant 3-4; capped lists are the full lists.
     # profiles (centers listing x): 1<-{2,3}, 2<-{1,3}, 3<-{1,2,4}, 4<-{3}

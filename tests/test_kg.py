@@ -1,6 +1,8 @@
 """KG layer tests: blocking, link scoring, connected components,
 canonicalization, triple materialization."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -56,60 +58,91 @@ def test_connected_components_chain_and_star(spark):
     assert len(comp) == 31
 
 
-def test_connected_components_hashmin_equivalence(spark):
-    # hash-to-min must assign the identical (id -> min-node) labeling as
-    # the alternating-star default on chains, stars, random graphs, and
-    # isolated self-loops (the A/B candidate of tools/cc_ab_hashmin.py)
-    import random
+def _union_find_components(raw):
+    """{node: min member id of its component}: pure-Python oracle."""
+    parent = {}
 
-    rng = random.Random(7)
-    cases = [
-        [(i, i + 1) for i in range(30)],                     # chain
-        [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
-        [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
-        [(rng.randrange(200), rng.randrange(200)) for _ in range(120)],
-    ]
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in raw:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _assert_matches_union_find(spark, cases):
     for raw in cases:
-        edges = spark.createDataFrame(raw, ["src", "dst"])
-        star = {
+        edges = spark.createDataFrame(raw, "src long, dst long")
+        got = {
             r["id"]: r["component"]
             for r in kg.connected_components(edges).collect()
         }
-        hm = {
-            r["id"]: r["component"]
-            for r in kg.connected_components_hashmin(edges).collect()
-        }
-        assert hm == star
+        assert got == _union_find_components(raw), raw
+
+
+def test_connected_components_hashmin_equivalence(spark):
+    # chains, stars, random graphs and isolated self-loops: the labelling
+    # is exactly the min member id of each component
+    rng = random.Random(7)
+    _assert_matches_union_find(spark, [
+        [(i, i + 1) for i in range(30)],                      # chain
+        [(0, i) for i in range(1, 12)] + [(50, 50)],          # star + loner
+        [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
+        [(rng.randrange(200), rng.randrange(200)) for _ in range(120)],
+    ])
 
 
 def test_connected_components_peel1_equivalence(spark):
-    # the degree-1 pre-peel variant (VERDICT r6 #5 A/B candidate) must
-    # assign the identical (id -> min-member) labeling on the peel's
-    # adversarial shapes: pendant chains (peel removes the true-min
-    # leaf), stars (anchor loses every edge), leaf-leaf pairs, isolated
-    # self-loops, and random graphs
-    import random
-
+    # degree-1 shapes: pendant chains (the min member is a leaf), stars,
+    # a lone pair, a cycle with tails, isolated self-loops, random graphs
     rng = random.Random(13)
-    cases = [
+    _assert_matches_union_find(spark, [
         [(i, i + 1) for i in range(30)],                      # chain
         [(5, i) for i in range(6, 18)] + [(50, 50)],          # star + loner
         [(1, 2)],                                             # single pair
         [(9, 3), (3, 4), (4, 5), (5, 3), (7, 8)],             # cycle + tails
         [(rng.randrange(60), rng.randrange(60)) for _ in range(90)],
         [(rng.randrange(300), rng.randrange(300)) for _ in range(150)],
-    ]
-    for raw in cases:
-        edges = spark.createDataFrame(raw, ["src", "dst"])
-        star = {
-            r["id"]: r["component"]
-            for r in kg.connected_components(edges).collect()
-        }
-        peeled = {
-            r["id"]: r["component"]
-            for r in kg.connected_components_peel1(edges).collect()
-        }
-        assert peeled == star, raw
+    ])
+
+
+def test_connected_components_raises_when_max_iter_runs_out(spark):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(29)], "src long, dst long"
+    )
+    with pytest.raises(ValueError, match="did not converge in 1 rounds"):
+        kg.connected_components(edges, max_iter=1)
+
+
+def test_cc_star_forest_certificate_is_exact(spark):
+    # a star forest (oriented src > dst) is already the answer: the
+    # certificate holds on the first round's output, with no confirm round
+    forest = spark.createDataFrame(
+        [(2, 1), (3, 1), (4, 1), (11, 10), (12, 10)], "src long, dst long"
+    )
+    _, rounds = kg.fixpoint(
+        forest, kg._star_round, kg._is_star_forest, 25, "cc"
+    )
+    assert rounds == 1
+
+    # the round that certifies carries the final labelling: one edge per
+    # non-root node, pointing at its component's min id
+    raw = [(9, 3), (3, 4), (4, 5), (5, 3), (7, 8)]
+    stars, _ = kg.fixpoint(
+        spark.createDataFrame(raw, "src long, dst long"),
+        kg._star_round,
+        kg._is_star_forest,
+        25,
+        "cc",
+    )
+    want = {(n, c) for n, c in _union_find_components(raw).items() if n != c}
+    assert {(r["src"], r["dst"]) for r in stars.collect()} == want
 
 
 def test_lsh_blocking_proposes_similar_pairs(spark, entities):
